@@ -1,12 +1,16 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.IOException
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Parquet sinks (SURVEY B2): append, partitioned write, atomic overwrite,
-  * and the upsert/snapshot write paths of the reference
-  * (/root/reference/index.js:329-375).
+/** Parquet sinks (SURVEY B2): append, partitioned write, atomic overwrite
+  * and the snapshot write path of the reference (index.js:329-345).
+  * Insert-if-absent into an append-only table is an append of
+  * [[Upsert.absentRows]] ([[graft.pipeline.FuelIngest]]); no sink
+  * rewrites a table to add rows.
   *
   * `prices`-style history is date-partitioned so the reference's
   * `(Id, Timestamp)` sort-key range read becomes partition pruning +
@@ -14,21 +18,37 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** Overwrite via write-temp-then-rename: readers never observe a
-    * half-written directory. (Non-transactional across concurrent
-    * writers — the reference's two sequential puts aren't atomic either,
-    * SURVEY §3 EP2.) */
+  /** Overwrite via write-temp-then-swap: readers never observe a
+    * half-written directory, and no crash point loses the table. The new
+    * copy is written to `<path>.__tmp__`; the old one is renamed aside to
+    * `<path>.__old__` before the new one is renamed in, and deleted only
+    * after. A crash between the two renames leaves the old copy aside,
+    * and the next call restores it before it writes; a crash after them
+    * leaves a stale aside copy, which the next call deletes.
+    * (Non-transactional across concurrent writers — the reference's two
+    * sequential puts aren't atomic either, SURVEY §3 EP2.) */
   def writeAtomic(df: DataFrame, path: String): Unit = {
     val spark = df.sparkSession
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path + ".__tmp__")
     val dst = new Path(path)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(path + ".__tmp__")
+    val aside = new Path(path + ".__old__")
+    if (fs.exists(aside)) {
+      if (fs.exists(dst)) fs.delete(aside, true)
+      else rename(fs, aside, dst)
+    }
     fs.delete(tmp, true)
     df.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(dst, true)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"atomic rename $tmp -> $dst failed")
+    if (fs.exists(dst)) rename(fs, dst, aside)
+    if (!fs.rename(tmp, dst)) {
+      if (fs.exists(aside)) rename(fs, aside, dst)
+      throw new IOException(s"atomic rename $tmp -> $dst failed")
+    }
+    fs.delete(aside, true)
   }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new IOException(s"rename $from -> $to failed")
 
   /** A8: append a timestamped snapshot, partitioned by snapshot date. */
   def appendSnapshot(df: DataFrame, path: String, tsCol: String = "Timestamp"): Unit =
@@ -47,16 +67,4 @@ object Sinks {
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-
-  /** A7 as a storage op: merge incoming into the parquet table at `path`
-    * with insert-if-absent semantics. */
-  def upsertParquet(spark: SparkSession, path: String, incoming: DataFrame,
-      keys: Seq[String]): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val merged =
-      if (fs.exists(new Path(path)))
-        Upsert.insertIfAbsent(spark.read.parquet(path), incoming, keys)
-      else incoming
-    writeAtomic(merged, path)
-  }
 }

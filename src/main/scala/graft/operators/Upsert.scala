@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
   * (`attribute_not_exists(Id)`, /root/reference/index.js:352-375: on
   * conflict the existing station row is kept untouched).
   *
-  * Both forms are one shuffle (the anti join on the key); with AQE the
+  * Both forms are one anti join on the key ([[absentRows]]); with AQE the
   * anti join broadcasts when the key set is small. At 100 TB the target
   * side should be bucketed/partitioned by key so only matching partitions
   * are scanned — the ops take plain DataFrames so callers control that.
@@ -18,15 +18,21 @@ import org.apache.spark.sql.functions.col
   */
 object Upsert {
 
+  /** The incoming rows whose key is absent from `target` — the anti-join
+    * half of both forms. An append-only table applies insert-if-absent by
+    * appending exactly these rows, reading nothing of the target but its
+    * keys. Repeated target keys cannot change an anti join's output, so
+    * the key side is not deduplicated (that would cost a shuffle). */
+  def absentRows(target: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
+    incoming.join(target.select(keys.map(col): _*), keys, "left_anti")
+
   /** A7 insert-if-absent: existing target rows win; only unseen-key
     * incoming rows are appended. */
   def insertIfAbsent(target: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
-    target.unionByName(
-      incoming.join(target.select(keys.map(col): _*).distinct(), keys, "left_anti"))
+    target.unionByName(absentRows(target, incoming, keys))
 
   /** Type-1 upsert: incoming rows win; target rows survive only where the
     * key is absent from incoming. */
   def lastWins(target: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
-    incoming.unionByName(
-      target.join(incoming.select(keys.map(col): _*).distinct(), keys, "left_anti"))
+    incoming.unionByName(absentRows(incoming, target, keys))
 }

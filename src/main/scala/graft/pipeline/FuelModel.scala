@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Typed API surface over the fuel tables (SURVEY §1.3: case-class
   * `Dataset`s where compile-time field checks help; `DataFrame` remains
-  * the engine's core abstraction). */
+  * the engine's core abstraction). Both tables are read with their
+  * declared [[FuelSchemas]], so a read infers nothing from footers. */
 object FuelModel {
 
   case class Morada(Morada: String, Localidade: String, CodPostal: String)
@@ -32,11 +33,12 @@ object FuelModel {
 
   def stations(spark: SparkSession, path: String): Dataset[Station] = {
     import spark.implicits._
-    spark.read.parquet(path).as[Station]
+    spark.read.schema(FuelSchemas.station).parquet(path).as[Station]
   }
 
   def prices(spark: SparkSession, path: String): Dataset[PriceSnapshot] = {
     import spark.implicits._
-    spark.read.parquet(path).drop("snapshot_date").as[PriceSnapshot]
+    spark.read.schema(FuelSchemas.prices).parquet(path)
+      .drop("snapshot_date").as[PriceSnapshot]
   }
 }

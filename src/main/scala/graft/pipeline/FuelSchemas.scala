@@ -64,4 +64,9 @@ object FuelSchemas {
     StructField("Id", LongType, nullable = false),
     StructField("Combustiveis", ArrayType(fuelEntry), nullable = true),
     StructField("Timestamp", TimestampType, nullable = false)))
+
+  /** The `prices` table as written: snapshots plus the date partition
+    * column they are partitioned by. */
+  val prices: StructType =
+    priceSnapshot.add(StructField("snapshot_date", DateType, nullable = false))
 }

@@ -96,6 +96,20 @@ final class RateLimiter(permitsPerSec: Double) extends Serializable {
   * quarantine count (A14) instead of killing the run. */
 object LookupEnricher {
 
+  private val pools = new java.util.concurrent.atomic.AtomicLong
+
+  /** Daemon fetch threads named `graft-enrich-<pool>-<n>`, one pool per
+    * partition and evaluation, so a thread dump attributes them. */
+  private def threadFactory(): java.util.concurrent.ThreadFactory = {
+    val pool = pools.incrementAndGet()
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    r => {
+      val t = new Thread(r, s"graft-enrich-$pool-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+  }
+
   def enrich(stubs: DataFrame, idCol: String, source: StationSource,
       cfg: EnrichConfig = EnrichConfig()): DataFrame = {
     import stubs.sparkSession.implicits._
@@ -122,7 +136,8 @@ object LookupEnricher {
         if (cfg.maxInFlight <= 1) {
           it.map { case (id, nome) => (id, nome, fetchWithRetry(id)) }
         } else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(cfg.maxInFlight)
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(cfg.maxInFlight,
+            LookupEnricher.threadFactory())
           // kill the pool when the task ends, even on abort mid-iterator
           Option(org.apache.spark.TaskContext.get()).foreach(
             _.addTaskCompletionListener[Unit](_ => pool.shutdownNow()))

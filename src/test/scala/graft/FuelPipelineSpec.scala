@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{FileBackedSource, FuelIngest}
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import graft.operators.Dedup
+import graft.pipeline.{FileBackedSource, FuelIngest, FuelSchemas}
 
 /** End-to-end fuel pipeline on the hand-written fixtures (FIXTURES.md §2):
   * exercises A2-A14 — list scan, fan-out enrichment, null filter, wide
@@ -38,6 +43,14 @@ final class FlakyProbeSource(transientFailures: Int, sleepMs: Long,
       Some(s"""{"id": $id, "resultado": {"Nome": "station $id"}}""")
     } finally EnricherProbe.inFlight.decrementAndGet()
   }
+}
+
+/** A listing and its detail payloads held in memory. */
+final class FixedSource(stubs: Seq[(Long, String)], details: Map[Long, String])
+    extends graft.pipeline.StationSource {
+  override def stationStubs(spark: SparkSession): DataFrame =
+    spark.createDataFrame(stubs).toDF("id", "nome")
+  override def detailFetcher(): Long => Option[String] = details.get _
 }
 
 class FuelPipelineSpec extends SparkSpecBase {
@@ -187,5 +200,118 @@ class FuelPipelineSpec extends SparkSpecBase {
       "fuelpriceguide.endpoint01=http://a\nfuelpriceguide.table=stations\nother.x=1\n")
     val cfg = graft.pipeline.Config.load(f.toString, "fuelpriceguide.")
     assert(cfg === Map("endpoint01" -> "http://a", "table" -> "stations"))
+  }
+
+  /** Spark jobs `body` launches, counted by job group. */
+  private def jobsOf(body: => Unit): Int = {
+    val gid = s"fuel-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (gid == js.properties.getProperty("spark.jobGroup.id")) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(gid, "fuel ingest cycle")
+      try body finally spark.sparkContext.clearJobGroup()
+      Thread.sleep(500) // listener bus drain
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("an ingest cycle stays inside its Spark job budget, with and without a stations table") {
+    val base = Files.createTempDirectory("fuel-jobs").toString
+    def cycle(ts: String) = jobsOf(FuelIngest.run(spark, source, s"$base/st", s"$base/pr",
+      Timestamp.valueOf(ts)))
+    val first = cycle("2023-01-12 06:00:00")
+    val second = cycle("2023-01-13 06:00:00")
+    // the count aggregate is 4 jobs (the enrichment cache, two shuffle
+    // stages, the result) and each rebalanced append 2 (the shuffle, the
+    // write); a later cycle adds 1 to broadcast the existing station Ids
+    assert((first, second) === ((8, 9)))
+  }
+
+  test("a retried cycle with the same runTs leaves prices unchanged and reports the same counts") {
+    val base = Files.createTempDirectory("fuel-retry").toString
+    val (st, pr) = (s"$base/st", s"$base/pr")
+    val ts = Timestamp.valueOf("2023-01-12 06:00:00")
+    def rows(path: String) = spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+    val r1 = FuelIngest.run(spark, source, st, pr, ts)
+    val (stations1, prices1) = (rows(st), rows(pr))
+    val r2 = FuelIngest.run(spark, source, st, pr, ts)
+    assert(r2.copy(elapsedMinutes = 0) === r1.copy(nStationsBefore = 3, elapsedMinutes = 0))
+    assert(rows(pr) === prices1)
+    assert(rows(st) === stations1)
+    // a later cycle still appends
+    FuelIngest.run(spark, source, st, pr, Timestamp.valueOf("2023-01-13 06:00:00"))
+    assert(spark.read.parquet(pr).count() === 6)
+  }
+
+  private def detail(id: Long, fuels: String) =
+    s"""{"id": $id, "resultado": {"Nome": "n$id", "Morada": {"Morada": "r", """ +
+      s""""Localidade": "l", "CodPostal": "c"}, "Combustiveis": $fuels}}"""
+  private val oneFuel = """[{"DataAtualizacao": "d", "Combustivel": "c", "Preco": 1.5}]"""
+
+  test("a listing that repeats an id is refused before anything is written") {
+    val base = Files.createTempDirectory("fuel-dup").toString
+    val src = new FixedSource(Seq(1L -> "a", 2L -> "b", 1L -> "a"),
+      Map(1L -> detail(1L, oneFuel), 2L -> detail(2L, oneFuel)))
+    val e = intercept[IllegalArgumentException](FuelIngest.run(spark, src,
+      s"$base/st", s"$base/pr", Timestamp.valueOf("2023-01-12 06:00:00")))
+    assert(e.getMessage.contains("repeats an id"), e.getMessage)
+    assert(!new java.io.File(s"$base/st").exists() && !new java.io.File(s"$base/pr").exists())
+  }
+
+  test("a stations table left empty by an earlier cycle counts as 0 stations before") {
+    val base = Files.createTempDirectory("fuel-empty").toString
+    val stubs = Seq(1L -> "a", 2L -> "b")
+    // every detail lacks Combustiveis: nothing passes the filter
+    val r1 = FuelIngest.run(spark, new FixedSource(stubs,
+        Map(1L -> detail(1L, "null"), 2L -> detail(2L, "null"))),
+      s"$base/st", s"$base/pr", Timestamp.valueOf("2023-01-12 06:00:00"))
+    assert((r1.nFiltered, r1.nStationsBefore, r1.nStationsAfter, r1.nPriceSnapshots) ===
+      ((0L, 0L, 0L, 0L)))
+    val r2 = FuelIngest.run(spark, new FixedSource(stubs,
+        Map(1L -> detail(1L, oneFuel), 2L -> detail(2L, oneFuel))),
+      s"$base/st", s"$base/pr", Timestamp.valueOf("2023-01-13 06:00:00"))
+    assert((r2.nFiltered, r2.nStationsBefore, r2.nStationsAfter, r2.nPriceSnapshots) ===
+      ((2L, 0L, 2L, 2L)))
+  }
+
+  /** The shuffle formulation the per-row fuel dedup replaced, kept as its
+    * reference: explode with positions, keep the last position per
+    * (Id, DataAtualizacao, Combustivel), and re-collect per Id. */
+  private def explodeDedupReference(df: DataFrame): DataFrame =
+    df.select(col("Id"), posexplode(col("Combustiveis")).as(Seq("pos", "fuel")))
+      .transform(d => Dedup.keepOne(d,
+        Seq("Id", "fuel.DataAtualizacao", "fuel.Combustivel"), Seq(col("pos").desc)))
+      .groupBy(col("Id"))
+      .agg(array_sort(collect_list(struct(
+        col("fuel.DataAtualizacao").as("DataAtualizacao"),
+        col("fuel.Combustivel").as("Combustivel"),
+        col("fuel.Preco").as("Preco")))).as("Combustiveis"))
+
+  test("per-row last-wins fuel dedup equals the explode/keepOne/collect_list reference") {
+    // small alphabets force duplicate keys; nulls appear as fields, as
+    // elements and as whole arrays, next to empty arrays
+    def orNull[A](g: Gen[A]): Gen[A] = Gen.frequency(1 -> Gen.const(null.asInstanceOf[A]), 4 -> g)
+    val entry: Gen[Row] = for {
+      d <- orNull(Gen.oneOf("2023-01-12 05:00", "2023-01-12 06:00"))
+      c <- orNull(Gen.oneOf("Gasoleo", "GPL"))
+      p <- orNull(Gen.chooseNum(1000, 1010).map(m => java.math.BigDecimal.valueOf(m.toLong, 3)))
+    } yield Row(d, c, p)
+    val fuels: Gen[Seq[Row]] = orNull(Gen.chooseNum(0, 6).flatMap(n => Gen.listOfN(n, orNull(entry))))
+    val table = Gen.listOfN(12, fuels).map(_.zipWithIndex.map { case (f, i) => Row(i.toLong, f) })
+    val schema = StructType(Seq(StructField("Id", LongType, nullable = false),
+      StructField("Combustiveis", ArrayType(FuelSchemas.fuelEntry), nullable = true)))
+    def byId(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.get(1).toString).toMap
+    val prop = Prop.forAllNoShrink(table) { rows =>
+      val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      val got = df.select(col("Id"), FuelIngest.lastWinsFuels(col("Combustiveis")).as("Combustiveis"))
+        .filter(size(col("Combustiveis")) > 0)
+      byId(got) == byId(explodeDedupReference(df))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(res.passed, res.status.toString)
   }
 }
