@@ -22,12 +22,10 @@ object DevSpj {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select($"l_orderkey", $"l_partkey", $"l_quantity",
         $"l_extendedprice", $"l_returnflag")
-    li.writeTo("gspj.a").tableProperty("merge.log", "true")
-      .tableProperty("merge.keys", "l_orderkey,l_partkey,l_returnflag")
+    li.writeTo("gspj.a").tableProperty("merge.keys", "l_orderkey,l_partkey,l_returnflag")
       .tableProperty("merge.partcol", "l_returnflag").create()
     li.groupBy($"l_returnflag").agg(sum($"l_quantity").as("q"))
-      .writeTo("gspj.b").tableProperty("merge.log", "true")
-      .tableProperty("merge.keys", "l_returnflag")
+      .writeTo("gspj.b").tableProperty("merge.keys", "l_returnflag")
       .tableProperty("merge.partcol", "l_returnflag").create()
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

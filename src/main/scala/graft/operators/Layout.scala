@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Physical data layout for scan-time pruning — the storage-side half
@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   *
   * All pure column expressions (codegen'd): one stats pass, one z-value
   * pass, then a range repartition + in-partition sort — exactly the
-  * cost of a normal sorted write.
+  * cost of a normal sorted write. Writing and compaction are the
+  * commit log's: `CommitLog.replaceAll(zOrderFrame(…))`,
+  * `CommitLog.optimize(targetFiles, zorderBy)` and
+  * `CALL graft.system.optimize`.
   */
 object Layout {
 
@@ -67,27 +70,5 @@ object Layout {
       .sortWithinPartitions(col("__z"))
       .drop(clusterCols.flatMap(c => Seq(s"__lo_$c", s"__hi_$c")): _*)
       .drop("__z")
-  }
-
-  /** Z-ordered parquet write: scale each cluster column by its global
-    * min-max (one tiny stats aggregate, broadcast), sort by the Morton
-    * code across `numFiles` range partitions, write atomically. */
-  def zOrderWrite(df: DataFrame, path: String, clusterCols: Seq[String],
-      numFiles: Int, bits: Int = 16): Unit =
-    Sinks.writeAtomic(zOrderFrame(df, clusterCols, numFiles, bits), path)
-
-  /** Small-file compaction: rewrite the parquet directory at `path` into
-    * `targetFiles` files (optionally re-sorted on `sortCols` so min-max
-    * stats survive the rewrite), atomically. The everyday maintenance op
-    * for streaming/append tables whose micro-batches leave thousands of
-    * KB-sized files that would otherwise dominate scan task scheduling. */
-  def compact(spark: SparkSession, path: String, targetFiles: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    val df = spark.read.parquet(path)
-    val out =
-      if (sortCols.isEmpty) df.repartition(targetFiles)
-      else df.repartitionByRange(targetFiles, sortCols.map(col): _*)
-        .sortWithinPartitions(sortCols.map(col): _*)
-    Sinks.writeAtomic(out, path)
   }
 }

@@ -62,9 +62,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * checkpoint) — [[compact]] writes a checkpoint manifest restating the
   * full state (live files, schema, txn table, partition tags, file
   * stats) and [[prune]] deletes the now-redundant prefix, the standard
-  * log-compaction move. `upsert` rewrites the full live set like the
-  * directory-swap sink it replaces
-  * ([[graft.operators.Sinks.writeAtomic]]); the 100 TB form is
+  * log-compaction move. `upsert` rewrites the full live set; the
+  * 100 TB form is
   * [[upsertPartitioned]]: manifests tag files with partition values
   * and a merge retires/rewrites ONLY the touched partitions' files
   * (`replace_parts`), so disjoint-partition writers contend only on
@@ -79,7 +78,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * sort-key seek the reference does on its DynamoDB range key
   * (/root/reference/index.js:305-314): [[readRange]] skips files whose
   * range can't overlap the predicate WITHOUT opening them, which is
-  * what makes [[graft.operators.Layout.zorder]] pay off on the log's
+  * what makes [[graft.operators.Layout.zOrderFrame]] pay off on the log's
   * own tables. [[readChanges]] is the CDC view: the file-diff of
   * consecutive manifests replayed as insert/delete row sets — the
   * incremental-consumer pattern the reference's poller implements
@@ -1315,7 +1314,7 @@ final class CommitLog private (spark: SparkSession, tableRoot: String) {
     * `colName` in the CLOSED range [lo, hi], scanning ONLY the data
     * files whose footer-harvested (min, max) can overlap it — the
     * manifest prunes whole files before any is opened (the move that
-    * makes [[graft.operators.Layout.zorder]]'d tables cheap to range-
+    * makes [[graft.operators.Layout.zOrderFrame]]'d tables cheap to range-
     * read; the reference gets the same effect from its sort-key seek,
     * /root/reference/index.js:305-314). Files with no recorded stats
     * for `colName` (pre-stats snapshots, unsupported types) are kept —

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource V2 WRITE path for the engine's merge semantics (SURVEY
-  * A7/B2): a `TableCatalog` of parquet-directory tables whose writes go
+  * A7/B2): a `TableCatalog` of [[CommitLog]] tables whose writes go
   * through a real Catalyst write node — `df.writeTo("graft.t").append()`
   * / `.createOrReplace()` — with the
   * reference's conflict behavior (`attribute_not_exists(Id)` conditional
@@ -25,13 +25,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - `merge.mode` = `insert-if-absent` (reference semantics, default
   *    when keys are set) | `last-wins` | `append` (plain)
   *  - `merge.partcol` = a key column whose string value partitions the
-  *    table at the manifest level (requires `merge.log`): merges then
-  *    read/rewrite ONLY the touched partitions
-  *    ([[CommitLog.upsertPartitioned]])
-  *  - `merge.log` = `true` routes writes through the versioned
-  *    [[CommitLog]] — per-item-atomic under CONCURRENT writers like the
-  *    reference's conditional put; the default directory-swap path is
-  *    documented single-writer
+  *    table at the manifest level: merges then read/rewrite ONLY the
+  *    touched partitions ([[CommitLog.upsertPartitioned]])
+  *
+  * Every table is a versioned commit-log table: each write is one CAS
+  * on the next manifest version, so writes are per-item-atomic under
+  * CONCURRENT writers like the reference's conditional put, and time
+  * travel, DELETE/UPDATE/MERGE, column mapping, CHECK constraints and
+  * partitioning need no opt-in. `merge.log` is accepted at CREATE only
+  * as `true` (older DDL spells it out) and cannot be altered. A table
+  * that was created but never written has no log yet and reads empty
+  * at its declared schema.
   *
   * Writes are NATIVE DSv2 (r10): Catalyst validates the append against
   * the catalog schema and plans a real AppendData /
@@ -44,10 +48,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `.overwritePartitions()` maps to [[CommitLog.replacePartitions]].
   *
   * Scale note: the merge itself is [[graft.operators.Upsert]]'s single
-  * key-shuffle anti join; the atomic swap is a directory rename. At
-  * 100 TB the target would be key-bucketed so the anti join co-locates —
-  * the table layout is the caller's via `merge.keys`-aligned bucketing
-  * ([[graft.operators.Sinks.writeBucketed]]).
+  * key-shuffle anti join; the commit is one manifest publish. At 100 TB
+  * the table is partitioned (`merge.partcol` / PARTITIONED BY) so a
+  * merge reads and rewrites only the touched partitions' files.
   *
   * Configure: `spark.sql.catalog.graft = graft.sources.GraftCatalog`,
   * `spark.sql.catalog.graft.warehouse = /some/dir`.
@@ -115,6 +118,20 @@ final class GraftCatalog extends TableCatalog
       .filter(id => fs.exists(metaPath(id)))
   }
 
+  /** Refuse a root written by the retired directory-swap path: no log,
+    * and `data/` holds Spark's own `part-` files. Reading it as a
+    * never-written table would hide its rows. The log renames every
+    * file it adopts to `<uuid>-part-…`, so what a failed first log
+    * write leaves behind never matches. */
+  private def refuseLegacyRoot(ident: Identifier): Unit = {
+    val data = new Path(dir(ident), "data")
+    if (fs.exists(data) && fs.listStatus(data).exists(_.getPath.getName.startsWith("part-")))
+      throw new IllegalStateException(
+        s"$ident: $data holds parquet files but the table has no commit " +
+          "log — it was written by the retired directory-swap format; " +
+          "re-create the table and write those files into it")
+  }
+
   override def loadTable(ident: Identifier): Table =
     loadWith(ident, None, None)
 
@@ -146,27 +163,22 @@ final class GraftCatalog extends TableCatalog
     val props = node.get("properties").properties().asScala
       .map(e => e.getKey -> e.getValue.asText()).toMap
     val root = dir(ident).toString
-    // commit-log tables resolve against the (possibly pinned) snapshot
-    // schema — upserts may have evolved it past the declared one
-    val schema =
-      if (CommitLog.exists(spark, root)) {
-        val log = CommitLog(spark, root)
-        val snap = asOfVersion match {
-          case Some(v) =>
-            val s = log.snapshotAt(v)
-            require(s.version == v, s"$ident: version $v not in the log")
-            s
-          case None => asOfTsMillis match {
-            case Some(t) => log.snapshotAt(log.versionAtTime(t))
-            case None => log.snapshot()
-          }
-        }
-        snap.schema.getOrElse(declared)
-      } else {
-        require(asOfVersion.isEmpty && asOfTsMillis.isEmpty,
-          s"$ident: time travel requires merge.log=true (versioned commit log)")
-        declared
+    if (!CommitLog.exists(spark, root)) refuseLegacyRoot(ident)
+    // tables resolve against the (possibly pinned) snapshot schema —
+    // upserts may have evolved it past the declared one; a never-
+    // written table has no committed schema and keeps the declared one
+    val log = CommitLog(spark, root)
+    val snap = asOfVersion match {
+      case Some(v) =>
+        val s = log.snapshotAt(v)
+        require(s.version == v, s"$ident: version $v not in the log")
+        s
+      case None => asOfTsMillis match {
+        case Some(t) => log.snapshotAt(log.versionAtTime(t))
+        case None => log.snapshot()
       }
+    }
+    val schema = snap.schema.getOrElse(declared)
     new GraftMergeTable(ident.toString, root, schema, props,
       asOfVersion, asOfTsMillis)
   }
@@ -176,6 +188,9 @@ final class GraftCatalog extends TableCatalog
     if (fs.exists(metaPath(ident))) throw new TableAlreadyExistsException(ident)
     val props0 = properties.asScala.toMap
       .filterNot { case (k, _) => k == TableCatalog.PROP_OWNER }
+    require(props0.get("merge.log").forall(_ == "true"),
+      s"$ident: merge.log=${props0("merge.log")} — every graft table is a " +
+        "commit-log table; the property is accepted only as 'true'")
     // PARTITIONED BY (...) is sugar for merge.partcol: an ordered list
     // of top-level identity columns and/or days(col) transforms maps
     // onto the manifest-level partition SPEC ([[PartSpec]] — every
@@ -222,27 +237,18 @@ final class GraftCatalog extends TableCatalog
               .equalsIgnoreCase(rendered)).getOrElse(false)),
           s"$ident: PARTITIONED BY ($rendered) conflicts with " +
             s"merge.partcol=${props0.getOrElse("merge.partcol", "")}")
-        require(props0.get("merge.log").forall(_ == "true"),
-          s"$ident: partitioned tables need merge.log=true (partition " +
-            "tags live in the commit-log manifests)")
         Some(rendered)
     }
-    val props = partProp.fold(props0)(c =>
-      props0 + ("merge.partcol" -> c) + ("merge.log" -> "true"))
+    val props = props0 ++ partProp.map("merge.partcol" -> _)
     // durable CHECK constraints (`constraint.<name>` = SQL boolean
     // expression) are enforced through the commit-log write paths —
-    // refuse them on plain directory tables, and catch an expression
-    // that does not even resolve against the declared schema NOW
-    // rather than on the first write
+    // catch an expression that does not even resolve against the
+    // declared schema NOW rather than on the first write
     val constraintProps =
       props.filter(_._1.startsWith(CommitLog.ConstraintPropPrefix))
-    if (constraintProps.nonEmpty) {
-      require(props.get("merge.log").contains("true"),
-        s"$ident: constraint.* table properties require merge.log=true " +
-          "(CHECK constraints are enforced by the commit-log write paths)")
+    if (constraintProps.nonEmpty)
       GraftCatalog.checkConstraintExprs(spark, ident.toString, schema,
         constraintProps)
-    }
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("schema", schema.json)
@@ -257,24 +263,24 @@ final class GraftCatalog extends TableCatalog
   /** SQL DDL: `ALTER TABLE … ADD COLUMNS` (nullable, appended — a
     * metadata-only change: old files read null, the additive-evolution
     * contract writes already follow; r12: `parent.child` paths add a
-    * nested field at the end of an existing struct column, commit-log
-    * tables only) and
-    * `SET/UNSET TBLPROPERTIES`. For commit-log tables the schema
-    * change COMMITS as an empty-`add` version first
-    * ([[CommitLog.addColumns]]), so versioned readers and time travel
-    * see it like any write-driven evolution; the declared-schema json
-    * then follows. `merge.log`/`merge.partcol` cannot be altered —
-    * flipping versioning or the partition tagging of EXISTING data
-    * would silently change read/maintenance semantics (recreate the
-    * table through a partitioned rewrite instead). Everything else
-    * (rename/drop/retype a column, positions) is refused loudly:
-    * without per-column IDs in the files, a rename silently orphans
-    * the old files' data. */
+    * nested field at the end of an existing struct column), RENAME /
+    * DROP COLUMN, ALTER COLUMN TYPE <wider>, and
+    * `SET/UNSET TBLPROPERTIES`. Every schema change COMMITS as an
+    * empty-`add` version first ([[CommitLog.addColumns]] and friends),
+    * so versioned readers and time travel see it like any write-driven
+    * evolution; the declared-schema json then follows. On a table that
+    * was never written, the declared schema is committed first as an
+    * empty version, so the change has a schema to apply to.
+    * `merge.log` cannot be altered; `merge.partcol` changes by
+    * partition-spec evolution (metadata-only). Column positions are
+    * refused loudly: old files have no value to reorder. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     import org.apache.spark.sql.connector.catalog.TableChange._
     import org.apache.spark.sql.types.StructField
     val mp = metaPath(ident)
     if (!fs.exists(mp)) throw new NoSuchTableException(ident)
+    val root = dir(ident).toString
+    if (!CommitLog.exists(spark, root)) refuseLegacyRoot(ident)
     val in = fs.open(mp)
     val raw = try {
       val bytes = new Array[Byte](fs.getFileStatus(mp).getLen.toInt)
@@ -286,6 +292,8 @@ final class GraftCatalog extends TableCatalog
     var props = node.get("properties").properties().asScala
       .map(e => e.getKey -> e.getValue.asText()).toMap
     val frozen = Set("merge.log", "merge.partcol")
+    val log = CommitLog(spark, root)
+    def seeded: CommitLog = GraftCatalog.seededLog(spark, root, schema)
     val added = scala.collection.mutable.ArrayBuffer.empty[StructField]
     // the merge surface addresses these columns by name in table
     // properties — renaming/dropping one underneath would silently
@@ -304,22 +312,16 @@ final class GraftCatalog extends TableCatalog
     changes.foreach {
       case a: AddColumn if a.fieldNames.length > 1 =>
         // NESTED add (r12): a new nullable field at the end of an
-        // existing struct column — commit-log tables only (the log
-        // version carries the evolution for time travel; a plain
-        // directory table has no history to pin it to)
+        // existing struct column (the log version carries the
+        // evolution for time travel)
         require(a.position() == null,
           s"$ident: ADD COLUMNS FIRST/AFTER is not supported — " +
             "new columns append at the end (old files have no value to reorder)")
         require(a.isNullable,
           s"$ident: added column '${a.fieldNames.mkString(".")}' must be " +
             "nullable — existing rows have no value for it")
-        val root = dir(ident).toString
-        require(CommitLog.exists(spark, root),
-          s"$ident: nested ADD COLUMNS requires merge.log=true — a plain " +
-            "directory table has no version history to carry the evolution")
         val f0 = StructField(a.fieldNames.last, a.dataType(), nullable = true)
-        val log = CommitLog(spark, root)
-        log.addNestedColumn(a.fieldNames.init.toSeq,
+        seeded.addNestedColumn(a.fieldNames.init.toSeq,
           Option(a.comment()).fold(f0)(f0.withComment))
         schema = log.snapshot().schema.getOrElse(schema)
       case a: AddColumn =>
@@ -341,10 +343,6 @@ final class GraftCatalog extends TableCatalog
           require(to.nonEmpty,
             s"$ident: cannot evolve to an EMPTY partition spec — " +
               "un-partitioning existing tags is a rewrite, not metadata")
-          val root = dir(ident).toString
-          require(CommitLog.exists(spark, root),
-            s"$ident: merge.partcol evolution requires merge.log=true")
-          val log = CommitLog(spark, root)
           // the REGISTRY is authoritative when it exists — a table
           // evolved through the library leaves the property stale, and
           // this ALTER must be able to resync it: `to` == the
@@ -371,16 +369,11 @@ final class GraftCatalog extends TableCatalog
         } else require(!frozen(sp.property),
           s"$ident: '${sp.property}' cannot be altered after creation")
         if (sp.property.startsWith(CommitLog.ConstraintPropPrefix)) {
-          // adding a durable CHECK constraint: logged tables only, the
-          // expression must resolve against the current schema, and the
-          // EXISTING rows must already satisfy it (Delta's ADD
-          // CONSTRAINT scan) — an invariant the table violates must
-          // fail here, not on some later unrelated write
-          val root = dir(ident).toString
-          require(CommitLog.exists(spark, root),
-            s"$ident: '${sp.property}' requires merge.log=true (CHECK " +
-              "constraints are enforced by the commit-log write paths)")
-          val log = CommitLog(spark, root)
+          // adding a durable CHECK constraint: the expression must
+          // resolve against the current schema, and the EXISTING rows
+          // must already satisfy it (Delta's ADD CONSTRAINT scan) — an
+          // invariant the table violates must fail here, not on some
+          // later unrelated write
           // resolve against the LOG's schema (write-driven evolution may
           // have outrun the declared json) — this is the loud gate for a
           // typo'd column (validateConstraints deliberately skips
@@ -407,26 +400,14 @@ final class GraftCatalog extends TableCatalog
         // only a top-level rename can break them
         if (rn.fieldNames.length == 1)
           requireNotStructural(rn.fieldNames.head, "RENAME")
-        val root = dir(ident).toString
-        require(CommitLog.exists(spark, root),
-          s"$ident: RENAME COLUMN requires merge.log=true — a plain " +
-            "directory table has no version history to carry the " +
-            "column mapping (recreate via a rewrite instead)")
         // the log commit is the source of truth (it pins the stable
         // physical name); the declared json then mirrors its schema
-        val log = CommitLog(spark, root)
-        log.renameColumn(rn.fieldNames.toSeq, rn.newName())
+        seeded.renameColumn(rn.fieldNames.toSeq, rn.newName())
         schema = log.snapshot().schema.getOrElse(schema)
       case del: DeleteColumn =>
         if (del.fieldNames.length == 1)
           requireNotStructural(del.fieldNames.head, "DROP")
-        val root = dir(ident).toString
-        require(CommitLog.exists(spark, root),
-          s"$ident: DROP COLUMN requires merge.log=true — a plain " +
-            "directory table has no version history to retire the " +
-            "column against (recreate via a rewrite instead)")
-        val log = CommitLog(spark, root)
-        log.dropColumn(del.fieldNames.toSeq)
+        seeded.dropColumn(del.fieldNames.toSeq)
         schema = log.snapshot().schema.getOrElse(schema)
       case ut: UpdateColumnType =>
         // r17: widen-by-DDL before the backfill arrives (Delta's ALTER
@@ -434,19 +415,13 @@ final class GraftCatalog extends TableCatalog
         // commit through the same lattice a wide write uses; anything
         // non-widening refuses loudly inside [[CommitLog
         // .widenColumnType]]
-        val root = dir(ident).toString
-        require(CommitLog.exists(spark, root),
-          s"$ident: ALTER COLUMN TYPE requires merge.log=true — a plain " +
-            "directory table has no version history to carry the " +
-            "widened schema (recreate via a rewrite instead)")
-        val log = CommitLog(spark, root)
-        log.widenColumnType(ut.fieldNames.toSeq, ut.newDataType())
+        seeded.widenColumnType(ut.fieldNames.toSeq, ut.newDataType())
         schema = log.snapshot().schema.getOrElse(schema)
       case other => throw new UnsupportedOperationException(
         s"$ident: unsupported ALTER TABLE change " +
           s"${other.getClass.getSimpleName} — supported: ADD COLUMNS " +
-          "(top-level, nullable, appended), RENAME/DROP COLUMN and " +
-          "ALTER COLUMN TYPE <wider> (commit-log tables), and " +
+          "(top-level, nullable, appended), RENAME/DROP COLUMN, " +
+          "ALTER COLUMN TYPE <wider>, and " +
           "SET/UNSET TBLPROPERTIES")
     }
     if (added.nonEmpty) {
@@ -456,21 +431,17 @@ final class GraftCatalog extends TableCatalog
         added.groupBy(f => lc(f.name)).filter(_._2.size > 1).values.flatten
       require(dups.isEmpty,
         s"$ident: ADD COLUMNS collides on: ${dups.map(_.name).distinct.mkString(", ")}")
-      val root = dir(ident).toString
       // the log commit goes FIRST: it carries the race/validation
       // checks, and a failure must leave the declared json untouched
-      if (CommitLog.exists(spark, root)) {
-        val log = CommitLog(spark, root)
-        log.addColumns(StructType(added.toSeq))
-        // mirror the LOG's schema (like the RENAME/DROP branches): a
-        // post-drop re-add takes a suffixed physical name there, and
-        // persisting the raw fields would leave the declared json
-        // binding the wrong physical name for any consumer reading it
-        // directly (loadWith shadows it with the log snapshot today,
-        // but the persisted metadata should not lie) — ADVICE r11
-        schema = log.snapshot().schema
-          .getOrElse(StructType(schema.fields ++ added))
-      } else schema = StructType(schema.fields ++ added)
+      seeded.addColumns(StructType(added.toSeq))
+      // mirror the LOG's schema (like the RENAME/DROP branches): a
+      // post-drop re-add takes a suffixed physical name there, and
+      // persisting the raw fields would leave the declared json
+      // binding the wrong physical name for any consumer reading it
+      // directly (loadWith shadows it with the log snapshot today,
+      // but the persisted metadata should not lie) — ADVICE r11
+      schema = log.snapshot().schema
+        .getOrElse(StructType(schema.fields ++ added))
     }
     val out = mapper.createObjectNode()
     out.put("schema", schema.json)
@@ -506,9 +477,9 @@ final class GraftCatalog extends TableCatalog
   }
 }
 
-/** A parquet-directory table whose appends merge per `merge.mode`.
-  * Data lives under `<path>/data` (sidecar metadata stays out of the
-  * parquet listing); reads go through [[GraftMergeTable.read]]. */
+/** A [[CommitLog]] table whose appends merge per `merge.mode`. Every
+  * read is a snapshot scan ([[GraftLogScanBuilder]]) and every write one
+  * log commit; a table with no log yet reads empty at `schema0`. */
 private[sources] final class GraftMergeTable(ident: String, path: String,
     schema0: StructType, props: Map[String, String],
     asOfVersion: Option[Long] = None, asOfTsMillis: Option[Long] = None)
@@ -516,8 +487,6 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
     with org.apache.spark.sql.connector.catalog.SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
-
-  private val dataPath = s"$path/data"
 
   /** The table's root path / properties — for [[GraftMorMergeCommand]],
     * which routes eligible SQL MERGE INTO statements through the
@@ -539,42 +508,42 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
     * tables remains the library surface (`CommitLog.merge`/`update`),
     * whose source-driven pruning rewrites only touched files; the SQL
     * statement rewrites the table (the no-runtime-filtering group =
-    * everything), which is the honest cost of the generic plan. */
+    * everything), which is the honest cost of the generic plan. On a
+    * never-written table the declared schema commits first
+    * ([[GraftCatalog.seededLog]]). */
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
     require(asOfVersion.isEmpty && asOfTsMillis.isEmpty,
       s"$ident: cannot run a row-level operation on a time-travel snapshot")
-    require(CommitLog.exists(SparkSession.active, path),
-      s"$ident: SQL row-level operations require merge.log=true (versioned commit log)")
+    GraftCatalog.seededLog(SparkSession.active, path, schema0)
     () => new GraftRowLevelOperation(ident, path, info.command(),
       props.get("merge.partcol").map(_.trim).filter(_.nonEmpty), props)
   }
 
-  /** SQL `DELETE FROM graft.t WHERE …` — filter-based DSv2 delete over
-    * commit-log tables, routed to [[CommitLog.delete]]'s three-layer
+  /** SQL `DELETE FROM graft.t WHERE …` — filter-based DSv2 delete,
+    * routed to [[CommitLog.delete]]'s three-layer
     * copy-on-write (manifest-stats candidates → predicate FIND scan →
     * touched-file rewrite), so a predicate-local SQL delete rewrites
     * only the files that hold matches. Accepted only when EVERY pushed
     * predicate translates to the library condition (else Spark reports
-    * the delete as unsupported rather than half-applying it), the
-    * table is logged, and no time-travel pin is active. An empty WHERE
+    * the delete as unsupported rather than half-applying it) and no
+    * time-travel pin is active. An empty WHERE
     * (delete everything) truncates via one empty `replace` commit
     * instead of rewriting files to empty shells. */
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     asOfVersion.isEmpty && asOfTsMillis.isEmpty &&
-      CommitLog.exists(SparkSession.active, path) &&
       filters.forall(f => GraftMergeTable.filterToColumn(f).isDefined)
 
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    val spark = SparkSession.active
-    require(CommitLog.exists(spark, path),
-      s"$ident: SQL DELETE requires merge.log=true (versioned commit log)")
-    val log = CommitLog(spark, path)
+    val log = CommitLog(SparkSession.active, path)
     val partCol = props.get("merge.partcol").map(_.trim).filter(_.nonEmpty)
     val conds = filters.map(f => GraftMergeTable.filterToColumn(f).getOrElse(
       throw new IllegalArgumentException(s"$ident: unsupported DELETE predicate $f")))
-    if (conds.isEmpty) { truncateTable(); () }
+    // a never-written table has no rows to delete and no version to
+    // delete from
+    if (log.snapshot().version < 0) ()
+    else if (conds.isEmpty) { truncateTable(); () }
     else log.delete(conds.reduce(_ && _), partCol)
   }
 
@@ -582,8 +551,6 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
     * prior version stays time-travel-reachable. */
   override def truncateTable(): Boolean = {
     val spark = SparkSession.active
-    require(CommitLog.exists(spark, path),
-      s"$ident: SQL TRUNCATE requires merge.log=true (versioned commit log)")
     val log = CommitLog(spark, path)
     val sch = log.snapshot().schema.getOrElse(schema0)
     log.replaceAll(spark.createDataFrame(
@@ -630,16 +597,15 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
       TableCapability.OVERWRITE_DYNAMIC,
       TableCapability.TRUNCATE)
 
-  /** DSv2 READ: commit-log tables scan the snapshot's live file list
-    * through [[GraftLogScanBuilder]] (Spark's own vectorized parquet
+  /** DSv2 READ: the snapshot's live file list, scanned through
+    * [[GraftLogScanBuilder]] (Spark's own vectorized parquet
     * scan underneath — full filter/column pushdown — plus manifest
     * stats + bloom FILE skipping on the pushed predicates, and
     * `versionAsOf` / `timestampAsOf` read options for time travel:
-    * `spark.read.option("versionAsOf", 3).table("graft.t")`). Plain
-    * directory tables scan `data/` as ordinary parquet. */
+    * `spark.read.option("versionAsOf", 3).table("graft.t")`). A table
+    * with no commit yet scans no files at its declared schema. */
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.read.ScanBuilder = {
-    val spark = SparkSession.active
     val optVersion = Option(options.get("versionAsOf")).map(v =>
       scala.util.Try(v.toLong).getOrElse(throw new IllegalArgumentException(
         s"$ident: versionAsOf '$v' must be numeric"))).orElse(asOfVersion)
@@ -647,23 +613,11 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
       .map(GraftLogSource.parseTsMillis).orElse(asOfTsMillis)
     require(optVersion.isEmpty || optTs.isEmpty,
       s"$ident: versionAsOf and timestampAsOf are mutually exclusive")
-    if (CommitLog.exists(spark, path))
-      // column-mapped (renamed) tables included — the builder
-      // translates logical ↔ physical names at the scan boundary
-      GraftLogSource.snapshotScanBuilder(path, optVersion, optTs,
-        schema0, options,
-        partCol = props.get("merge.partcol").map(_.trim).filter(_.nonEmpty))
-    else {
-      require(optVersion.isEmpty && optTs.isEmpty,
-        s"$ident: time travel requires merge.log=true (versioned commit log)")
-      val fsc = new Path(dataPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val paths = if (fsc.exists(new Path(dataPath))) Seq(dataPath) else Nil
-      org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
-          s"$ident data", spark, options, paths, Some(schema0),
-          classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-        .newScanBuilder(options)
-    }
+    // column-mapped (renamed) tables included — the builder
+    // translates logical ↔ physical names at the scan boundary
+    GraftLogSource.snapshotScanBuilder(path, optVersion, optTs,
+      schema0, options,
+      partCol = props.get("merge.partcol").map(_.trim).filter(_.nonEmpty))
   }
 
   private def keys: Seq[String] =
@@ -677,7 +631,7 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
     * commit protocol, speculation-safe — the same delegate the
     * row-level path uses), and the driver-side commit routes the
     * staged files to the right commit-log operation. Plain appends on
-    * un-tagged logged tables ADOPT the staged files directly
+    * un-tagged tables ADOPT the staged files directly
     * ([[CommitLog.commitStagedAdd]] — zero rewrite, the batch is
     * written exactly once); merge modes and partitioned routes read
     * the staged batch back (columnar, local) and run the same
@@ -695,11 +649,9 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
       override def truncate(): WriteBuilder = { overwrite = true; this }
       override def overwriteDynamicPartitions(): WriteBuilder = { dynamic = true; this }
       override def build(): Write = {
-        if (dynamic) {
-          require(logged && props.get("merge.partcol").exists(_.trim.nonEmpty),
-            s"$ident: dynamic partition overwrite needs merge.log=true and " +
-              "merge.partcol (the manifest-level partition column)")
-        }
+        require(!dynamic || props.get("merge.partcol").exists(_.trim.nonEmpty),
+          s"$ident: dynamic partition overwrite needs merge.partcol " +
+            "(the manifest-level partition column)")
         buildNativeWrite(info, overwrite, dynamic)
       }
     }
@@ -756,7 +708,7 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
             if (dynamic) {
               CommitLog(sess, path).withConstraintProps(props)
                 .replacePartitions(stagedDf, partCol.get)
-            } else if (logged && !overwrite && mode == "append" && partCol.isEmpty) {
+            } else if (!overwrite && mode == "append" && partCol.isEmpty) {
               // zero-rewrite adoption: the staged task outputs BECOME
               // the table's new files, one metadata commit
               CommitLog(sess, path).withConstraintProps(props)
@@ -781,70 +733,35 @@ private[sources] final class GraftMergeTable(ident: String, path: String,
     }
   }
 
-  private def exists(data: DataFrame): Boolean = {
-    val fs = new Path(dataPath)
-      .getFileSystem(data.sparkSession.sparkContext.hadoopConfiguration)
-    fs.exists(new Path(dataPath))
-  }
-
-  private def logged: Boolean = props.get("merge.log").contains("true")
-
   private def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    import graft.operators.{Sinks, Upsert}
     // Catalyst has already matched `data` to the declared schema (that
     // is what the catalog buys over a path write); column order is
     // normalized here only so parquet files stay field-order stable.
     val aligned = data.select(schema0.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
     val partCol = props.get("merge.partcol").map(_.trim).filter(_.nonEmpty)
-    require(partCol.isEmpty || logged,
-      s"$ident: merge.partcol requires merge.log=true (partition-scoped " +
-        "merges live in the commit log)")
-    if (logged) {
-      // merge.log=true: writes go through the versioned commit log —
-      // per-table serialization under CONCURRENT writers (the
-      // reference's conditional-put guarantee, which the plain
-      // directory-swap path below does not give). merge.partcol scopes
-      // every merge to the touched partitions (CommitLog.upsertPartitioned).
-      val log = CommitLog(data.sparkSession, path).withConstraintProps(props)
-      if (overwrite)
-        // truncate()/createOrReplace is whole-table; the partitioned
-        // form keeps the tags so scoped merges stay usable. The
-        // partition-scoped overwrite (replace only the partitions in
-        // the data) is the library call CommitLog.replacePartitions —
-        // Spark's analyzer blocks .overwritePartitions() on V1 writes.
-        partCol.fold(log.replaceAll(aligned): Unit)(p =>
-          log.replaceAllPartitioned(aligned, p))
-      else mode match {
-        case "append" =>
-          partCol.fold(log.append(aligned): Unit)(p =>
-            log.appendPartitioned(aligned, p))
-        case "insert-if-absent" =>
-          require(keys.nonEmpty, s"$ident: merge.mode=$mode requires merge.keys")
-          partCol.fold(log.upsert(aligned, keys, CommitLog.InsertIfAbsent): Unit)(
-            p => log.upsertPartitioned(aligned, keys, CommitLog.InsertIfAbsent, p))
-        case "last-wins" =>
-          require(keys.nonEmpty, s"$ident: merge.mode=$mode requires merge.keys")
-          partCol.fold(log.upsert(aligned, keys, CommitLog.LastWins): Unit)(
-            p => log.upsertPartitioned(aligned, keys, CommitLog.LastWins, p))
-        case other =>
-          throw new IllegalArgumentException(
-            s"$ident: unknown merge.mode '$other' (append | insert-if-absent | last-wins)")
-      }
-      return
-    }
-    val target = if (overwrite || !exists(data)) None
-      else Some(data.sparkSession.read.schema(schema0).parquet(dataPath))
-    (mode, target) match {
-      case (_, None) => Sinks.writeAtomic(aligned, dataPath)
-      case ("append", Some(_)) =>
-        aligned.write.mode("append").parquet(dataPath)
-      case ("insert-if-absent", Some(t)) =>
+    // one log commit per write — per-table serialization under
+    // CONCURRENT writers (the reference's conditional-put guarantee).
+    // merge.partcol scopes every merge to the touched partitions
+    // (CommitLog.upsertPartitioned).
+    val log = CommitLog(data.sparkSession, path).withConstraintProps(props)
+    if (overwrite)
+      // truncate()/createOrReplace is whole-table; the partitioned
+      // form keeps the tags so scoped merges stay usable.
+      partCol.fold(log.replaceAll(aligned): Unit)(p =>
+        log.replaceAllPartitioned(aligned, p))
+    else mode match {
+      case "append" =>
+        partCol.fold(log.append(aligned): Unit)(p =>
+          log.appendPartitioned(aligned, p))
+      case "insert-if-absent" =>
         require(keys.nonEmpty, s"$ident: merge.mode=$mode requires merge.keys")
-        Sinks.writeAtomic(Upsert.insertIfAbsent(t, aligned, keys), dataPath)
-      case ("last-wins", Some(t)) =>
+        partCol.fold(log.upsert(aligned, keys, CommitLog.InsertIfAbsent): Unit)(
+          p => log.upsertPartitioned(aligned, keys, CommitLog.InsertIfAbsent, p))
+      case "last-wins" =>
         require(keys.nonEmpty, s"$ident: merge.mode=$mode requires merge.keys")
-        Sinks.writeAtomic(Upsert.lastWins(t, aligned, keys), dataPath)
-      case (other, _) =>
+        partCol.fold(log.upsert(aligned, keys, CommitLog.LastWins): Unit)(
+          p => log.upsertPartitioned(aligned, keys, CommitLog.LastWins, p))
+      case other =>
         throw new IllegalArgumentException(
           s"$ident: unknown merge.mode '$other' (append | insert-if-absent | last-wins)")
     }
@@ -908,8 +825,9 @@ private[sources] final class GraftLogScanBuilder(
       case None => log.snapshot()
     }
   }
+  // a table with no commit yet scans no files at the relation schema
   private val snapSchema: StructType =
-    snap.schema.getOrElse(new StructType())
+    snap.schema.orElse(Option(relationSchema)).getOrElse(new StructType())
 
   // r18: the spec every WHOLE-SCAN tag interpretation must use — the
   // SNAPSHOT'S OWN current spec, never the live table property. A
@@ -2882,6 +2800,16 @@ private[sources] object GraftRowLevelOperation {
 }
 
 object GraftCatalog {
+  /** The table's log, with a committed schema: a never-written table
+    * first commits its declared schema as an empty version, so a column
+    * change or a row-level rewrite has a schema to apply to. */
+  private[sources] def seededLog(spark: SparkSession, root: String,
+      declared: StructType): CommitLog = {
+    val log = CommitLog(spark, root)
+    if (log.snapshot().schema.isEmpty) log.addColumns(declared)
+    log
+  }
+
   /** Loud parse/resolution gate for durable `constraint.*` properties:
     * each value must be a SQL boolean expression that resolves against
     * `schema`. Runs at CREATE/ALTER time so a typo'd column or broken
@@ -2961,14 +2889,9 @@ object GraftMergeTable {
     }
   }
 
-  /** Read a graft-catalog table's data (the V1 read side of the V1Write
-    * bridge — parquet scan with full pushdown/pruning). Commit-log
-    * tables (`merge.log=true`) are read at their latest committed
+  /** Read a graft-catalog table's data at its latest committed
     * version — NEVER by directory listing, which would see retired and
     * in-flight files. */
-  def read(spark: SparkSession, warehouse: String, table: String): DataFrame = {
-    val root = s"$warehouse/$table"
-    if (CommitLog.exists(spark, root)) CommitLog(spark, root).read()
-    else spark.read.parquet(s"$root/data")
-  }
+  def read(spark: SparkSession, warehouse: String, table: String): DataFrame =
+    CommitLog(spark, s"$warehouse/$table").read()
 }

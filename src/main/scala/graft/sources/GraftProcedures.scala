@@ -149,7 +149,7 @@ private[sources] object GraftProcedures {
           // ([[CommitLog.cloneTo]] — zero data copied, absolute file
           // references) AND register the target as a catalog table by
           // mirroring the source's `_graft_table.json` (properties
-          // carried — merge.log/merge.partcol/merge.keys keep working
+          // carried — merge.partcol/merge.keys/constraints keep working
           // on the clone; schema mirrored from the CLONED snapshot so
           // the declared json never lags write-driven evolution).
           val srcTable = in.getUTF8String(0).toString

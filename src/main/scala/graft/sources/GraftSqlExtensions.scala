@@ -157,7 +157,6 @@ private[sources] object GraftMorMerge
       case _ => refuse("not a plain graft merge table")
     }
     val path = table.tablePath
-    if (!CommitLog.exists(spark, path)) refuse("not a logged table")
     val log = CommitLog(spark, path).withConstraintProps(table.tableProps)
     val targetSchema = log.snapshot().schema.getOrElse(refuse("table has no committed schema"))
     val partCol = table.tableProps.get("merge.partcol").map(_.trim).filter(_.nonEmpty)

@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Layout
 
-/** Physical-layout ops: Morton interleave correctness, the clustering
-  * property z-order buys for multi-dimension pruning, and small-file
-  * compaction. */
+/** Physical-layout ops: Morton interleave correctness and the
+  * clustering property z-order buys for multi-dimension pruning.
+  * Small-file compaction is `CommitLog.optimize` (CommitLogSpec). */
 class LayoutSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -38,43 +38,30 @@ class LayoutSpec extends SparkSpecBase {
   }
 
   test("z-order bounds BOTH dimensions' per-file span; single sort only one") {
+    import graft.sources.CommitLog
     val grid = spark.range(10000).select(
       ($"id" % 100).as("x"), ($"id" / 100).cast("long").as("y"))
-    val zdir = "/tmp/graft-test/zorder"
-    val sdir = "/tmp/graft-test/singlesort"
-    Layout.zOrderWrite(grid, zdir, Seq("x", "y"), numFiles = 16)
-    grid.repartitionByRange(16, $"x").sortWithinPartitions($"x")
-      .write.mode("overwrite").parquet(sdir)
+    val base = java.nio.file.Files.createTempDirectory("zspan").toString
+    val zlog = CommitLog(spark, s"$base/zorder")
+    val slog = CommitLog(spark, s"$base/singlesort")
+    zlog.replaceAll(Layout.zOrderFrame(grid, Seq("x", "y"), numFiles = 16))
+    slog.replaceAll(grid.repartitionByRange(16, $"x").sortWithinPartitions($"x"))
 
-    def avgSpans(path: String): (Double, Double) = {
-      val spans = spark.read.parquet(path)
+    def avgSpans(log: CommitLog): (Double, Double) = {
+      val spans = log.read()
         .groupBy(input_file_name().as("f"))
         .agg((max($"x") - min($"x")).cast("double").as("sx"),
           (max($"y") - min($"y")).cast("double").as("sy"))
         .agg(avg($"sx"), avg($"sy")).as[(Double, Double)].head()
       spans
     }
-    val (zx, zy) = avgSpans(zdir)
-    val (sx, sy) = avgSpans(sdir)
+    val (zx, zy) = avgSpans(zlog)
+    val (sx, sy) = avgSpans(slog)
     // global span is 99 in each dimension; 16 z-files ~ 4x4 tiles
     assert(zx < 50 && zy < 50, s"z-order spans ($zx, $zy) should both be tile-sized")
     assert(sx < 15, s"single-sort clusters its own key, got $sx")
     assert(sy > 90, s"single-sort leaves the other dimension unclustered, got $sy")
     // same rows either way
-    assert(spark.read.parquet(zdir).count() === 10000L)
-  }
-
-  test("compact rewrites many small files into the target count, keeping rows") {
-    val dir = "/tmp/graft-test/compact"
-    val df = spark.range(5000).select($"id", ($"id" % 7).as("k"))
-    df.repartition(64).write.mode("overwrite").parquet(dir)
-    def nFiles = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(nFiles === 64)
-    Layout.compact(spark, dir, targetFiles = 4, sortCols = Seq("id"))
-    assert(nFiles === 4)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === 5000L)
-    assert(back.agg(sum($"id")).as[Long].head() === (4999L * 5000 / 2))
+    assert(zlog.read().count() === 10000L)
   }
 }

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.operators.{AsOf, Dedup, Sinks, Upsert}
+import graft.operators.{AsOf, Dedup, Upsert}
 
 /** Unit + randomized-property tests for the tier-A library operators
   * (SURVEY §5.4). Randomized cases use a fixed seed → deterministic. */
@@ -39,29 +38,6 @@ class OperatorsSpec extends SparkSpecBase {
       assert(once.orderBy("k", "v").collect().toSeq ===
         twice.orderBy("k", "v").collect().toSeq)
     }
-  }
-
-  test("writeAtomic: no crash point of the directory swap loses the table") {
-    val t = Files.createTempDirectory("swap").toString + "/t"
-    val aside = Paths.get(s"$t.__old__")
-    def rows() = spark.read.parquet(t).orderBy("k").as[(Long, String)].collect().toSeq
-    Sinks.writeAtomic(kv(Seq(1L -> "a", 2L -> "b")), t)
-    // the state a crash leaves between renaming the old copy aside and
-    // renaming the new copy in: no table at the destination
-    Files.move(Paths.get(t), aside)
-    // the next write restores the old copy before it writes, so a write
-    // that then fails leaves the old table in place
-    val failing = kv(Seq(3L -> "c"))
-      .select(col("k"), when(col("k") > 0, raise_error(lit("boom"))).otherwise(col("v")).as("v"))
-    intercept[Exception](Sinks.writeAtomic(failing, t))
-    assert(rows() === Seq(1L -> "a", 2L -> "b"))
-    assert(!Files.exists(aside))
-    // the state a crash leaves after both renames: a stale aside copy,
-    // which the next write drops
-    kv(Seq(5L -> "e")).write.parquet(aside.toString)
-    Sinks.writeAtomic(kv(Seq(4L -> "d")), t)
-    assert(rows() === Seq(4L -> "d"))
-    assert(!Files.exists(aside))
   }
 
   test("dedup keeps exactly one row per key, deterministically") {

@@ -108,8 +108,10 @@ class SourcesSpec extends SparkSpecBase {
     intercept[Exception] {
       Seq((1L, "a")).toDF("id", "nome").writeTo("graft3.nope").append()
     }
-    Seq((1L, "a")).toDF("id", "nome")
-      .writeTo("graft3.bad").tableProperty("merge.mode", "bogus").create()
+    // created with no rows: a write with rows is already a merge, so the
+    // first append is where an unknown mode surfaces
+    spark.sql("CREATE TABLE graft3.bad (id BIGINT, nome STRING) " +
+      "TBLPROPERTIES ('merge.mode' = 'bogus')")
     val e = intercept[Exception] {
       Seq((2L, "b")).toDF("id", "nome").writeTo("graft3.bad").append()
     }
@@ -200,18 +202,26 @@ class SourcesSpec extends SparkSpecBase {
     assert(spark.table("gpr.t").filter($"extra".isNotNull).count() === 1L)
   }
 
-  test("graft catalog DSv2 read: plain directory tables scan; time travel refused") {
+  test("graft catalog DSv2 read: a directory-swap root with no log is refused by name") {
     val wh = Files.createTempDirectory("graft-wh-plain").toString
     spark.conf.set("spark.sql.catalog.gpl", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gpl.warehouse", wh)
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").writeTo("gpl.t").create()
-    assert(spark.table("gpl.t").as[(Long, String)].collect().toSet
-      === Set((1L, "a"), (2L, "b")))
-    val e = intercept[Exception] {
-      spark.read.option("versionAsOf", "0").table("gpl.t").collect()
-    }
-    assert(e.getMessage.contains("merge.log") ||
-      Option(e.getCause).exists(_.getMessage.contains("merge.log")))
+    // what the retired directory-swap format left: Spark's own part-
+    // files under data/ and no commit log
+    spark.sql("CREATE TABLE gpl.t (id BIGINT, v STRING)")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$wh/t/data")
+    val e = intercept[Exception](spark.table("gpl.t").collect())
+    assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+      .take(5).exists(t => Option(t.getMessage).exists(m =>
+        m.contains(s"$wh/t/data") && m.contains("no commit log"))), e.getMessage)
+    intercept[Exception](spark.sql("ALTER TABLE gpl.t ADD COLUMNS (x INT)"))
+    assert(!graft.sources.CommitLog.exists(spark, s"$wh/t"),
+      "a refused ALTER must not start a log over the old files")
+    // a data/ directory alone (what a failed first log write leaves) is
+    // still a never-written table
+    spark.sql("CREATE TABLE gpl.u (id BIGINT)")
+    Files.createDirectories(java.nio.file.Paths.get(s"$wh/u/data"))
+    assert(spark.table("gpl.u").count() === 0L)
   }
 
   test("graft-log format: path-based reads, time travel, and the batch change feed") {
@@ -302,9 +312,11 @@ class SourcesSpec extends SparkSpecBase {
     assert(spark.table("gdel.t").columns.toSeq === Seq("id", "x", "v"))
     assert(log.readVersion(2L).count() === 1L, "truncate is a commit, history intact")
 
-    // a non-logged table refuses SQL DELETE cleanly
-    Seq((1L, "a")).toDF("id", "v").writeTo("gdel.plain").create()
-    intercept[Exception] { spark.sql("DELETE FROM gdel.plain WHERE id = 1") }
+    // a table created with no properties takes SQL DELETE too
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").writeTo("gdel.plain").create()
+    spark.sql("DELETE FROM gdel.plain WHERE id = 1")
+    assert(spark.table("gdel.plain").as[(Long, String)].collect().toSeq
+      === Seq((2L, "b")))
   }
 
   test("SQL UPDATE and MERGE INTO route through the row-level write path") {
@@ -533,7 +545,7 @@ class SourcesSpec extends SparkSpecBase {
       .take(5).exists(t => Option(t.getMessage).exists(_.contains("cannot be altered"))))
   }
 
-  test("ALTER TABLE ADD COLUMNS on a plain directory table surfaces as nulls") {
+  test("ALTER TABLE ADD COLUMNS on a table created with no properties surfaces as nulls") {
     val wh = Files.createTempDirectory("graft-alter2").toString
     spark.conf.set("spark.sql.catalog.galt2", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.galt2.warehouse", wh)
@@ -541,6 +553,16 @@ class SourcesSpec extends SparkSpecBase {
     spark.sql("ALTER TABLE galt2.t ADD COLUMNS (extra BIGINT)")
     assert(spark.table("galt2.t").select($"id", $"extra")
       .as[(Long, Option[Long])].collect().toSeq === Seq((1L, None)))
+    // a never-written table: its declared schema commits first (v0),
+    // the added column on top of it (v1)
+    spark.sql("CREATE TABLE galt2.e (id BIGINT)")
+    spark.sql("ALTER TABLE galt2.e ADD COLUMNS (extra BIGINT)")
+    assert(spark.table("galt2.e").columns.toSeq === Seq("id", "extra"))
+    assert(spark.table("galt2.e").count() === 0L)
+    spark.sql("INSERT INTO galt2.e VALUES (1, 2)")
+    assert(spark.table("galt2.e").as[(Long, Long)].collect().toSeq === Seq((1L, 2L)))
+    assert(spark.sql("SELECT * FROM galt2.e VERSION AS OF 0").columns.toSeq
+      === Seq("id"))
   }
 
   test("CALL procedures run commit-log maintenance from SQL") {
@@ -649,11 +671,11 @@ class SourcesSpec extends SparkSpecBase {
     spark.sql("INSERT INTO gcons.t VALUES (-9, 1.0)")
     assert(spark.table("gcons.t").count() === 4L)
 
-    // plain directory tables cannot carry constraints (no enforced path)
-    intercept[Exception] {
-      Seq((1L, 1.0)).toDF("id", "price").writeTo("gcons.plain")
-        .tableProperty("constraint.p", "price >= 0").create()
-    }
+    // a table created without merge.log enforces constraints the same way
+    Seq((1L, 1.0)).toDF("id", "price").writeTo("gcons.plain")
+      .tableProperty("constraint.p", "price >= 0").create()
+    intercept[Exception] { spark.sql("INSERT INTO gcons.plain VALUES (2, -1.0)") }
+    assert(spark.table("gcons.plain").count() === 1L)
   }
 
   test("CALL clone forks a catalog table zero-copy at a pinned version") {
@@ -900,8 +922,7 @@ class SourcesSpec extends SparkSpecBase {
       Seq("id"), graft.sources.CommitLog.LastWins)                      // v4
     assert(spark.table("gns.t").filter($"id" === 5L).select($"meta")
       .collect().head.isNullAt(0), "null struct must stay null")
-    // refusals: non-struct parent, unknown parent, collision, nested
-    // RENAME/DROP, and plain-directory tables
+    // refusals: non-struct parent, unknown parent, collision
     def refuses(sql: String, frag: String): Unit = {
       val e = intercept[Exception](spark.sql(sql))
       assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
@@ -935,13 +956,12 @@ class SourcesSpec extends SparkSpecBase {
     val wh = Files.createTempDirectory("graft-wh-pby").toString
     spark.conf.set("spark.sql.catalog.gpby", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gpby.warehouse", wh)
-    // SQL DDL form — partitioning is sugar for merge.partcol+merge.log
+    // SQL DDL form — partitioning is sugar for merge.partcol
     spark.sql("""CREATE TABLE gpby.t (id BIGINT, day STRING, x DOUBLE)
       PARTITIONED BY (day)""")
     val props = spark.sql("SHOW TBLPROPERTIES gpby.t")
       .as[(String, String)].collect().toMap
     assert(props.get("merge.partcol").contains("day"))
-    assert(props.get("merge.log").contains("true"))
     spark.sql("INSERT INTO gpby.t VALUES (1, 'd1', 1.0), (2, 'd2', 2.0)")
     val log = graft.sources.CommitLog(spark, s"$wh/t")
     val s = log.snapshot()
@@ -1049,5 +1069,135 @@ class SourcesSpec extends SparkSpecBase {
       spark.conf.set("spark.graft.spj.preserveDataGrouping", "false")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
     }
+  }
+
+  // ── one table format: every catalog table is a commit-log table ─────
+
+  private def catalogAt(cat: String, prefix: String): String = {
+    val wh = Files.createTempDirectory(prefix).toString
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    wh
+  }
+
+  private def refuses(e: Throwable, frag: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(5)
+      .exists(t => Option(t.getMessage).exists(_.contains(frag)))
+
+  test("a table created with no properties is versioned: time travel, DML, column DDL, CHECK, PARTITIONED BY") {
+    val wh = catalogAt("gnp", "graft-wh-noprops")
+    Seq((1L, 10.0, (1L, "a")), (2L, 20.0, (2L, "b")), (3L, 30.0, (3L, "c")))
+      .toDF("id", "x", "meta")
+      .select($"id", $"x", $"meta".cast("struct<ck:bigint,tag:string>").as("meta"))
+      .writeTo("gnp.t").create()                                         // v0
+    spark.sql("INSERT INTO gnp.t VALUES (4, 40.0, named_struct('ck', 4L, 'tag', 'd'))") // v1
+    // versionAsOf, as a read option and in SQL
+    assert(spark.read.option("versionAsOf", "0").table("gnp.t").count() === 3L)
+    assert(spark.sql("SELECT * FROM gnp.t VERSION AS OF 1").count() === 4L)
+    // SQL DELETE
+    spark.sql("DELETE FROM gnp.t WHERE id = 1")                          // v2
+    assert(spark.table("gnp.t").select($"id").as[Long].collect().sorted.toSeq
+      === Seq(2L, 3L, 4L))
+    // nested ADD COLUMNS
+    spark.sql("ALTER TABLE gnp.t ADD COLUMNS (meta.score DOUBLE)")       // v3
+    assert(spark.table("gnp.t").filter($"meta.score".isNotNull).count() === 0L)
+    // RENAME and DROP COLUMN
+    spark.sql("ALTER TABLE gnp.t RENAME COLUMN x TO amount")             // v4
+    assert(spark.table("gnp.t").agg(sum($"amount")).as[Double].head() === 90.0)
+    spark.sql("ALTER TABLE gnp.t DROP COLUMN amount")                    // v5
+    assert(!spark.table("gnp.t").columns.contains("amount"))
+    // a constraint.* CHECK
+    spark.sql("ALTER TABLE gnp.t SET TBLPROPERTIES ('constraint.id_pos' = 'id > 0')")
+    val bad = intercept[Exception] {
+      spark.sql("INSERT INTO gnp.t VALUES (-1, named_struct('ck', 0L, 'tag', 'z', 'score', 0D))")
+    }
+    assert(refuses(bad, "id_pos"), bad.getMessage)
+    // TRUNCATE keeps the history reachable
+    spark.sql("TRUNCATE TABLE gnp.t")                                    // v6
+    assert(spark.table("gnp.t").count() === 0L)
+    assert(spark.sql("SELECT * FROM gnp.t VERSION AS OF 1").count() === 4L)
+    assert(graft.sources.CommitLog(spark, s"$wh/t").snapshot().version === 6L)
+    // PARTITIONED BY
+    spark.sql("CREATE TABLE gnp.p (id BIGINT, day STRING) PARTITIONED BY (day)")
+    spark.sql("INSERT INTO gnp.p VALUES (1, 'd1'), (2, 'd2')")
+    val s = graft.sources.CommitLog(spark, s"$wh/p").snapshot()
+    assert(s.files.nonEmpty && s.files.forall(s.parts.contains))
+  }
+
+  test("merge.log is not a switch: CREATE accepts only 'true', SET TBLPROPERTIES refuses it") {
+    catalogAt("gml", "graft-wh-mlog")
+    val e1 = intercept[Exception] {
+      Seq((1L, "a")).toDF("id", "v").writeTo("gml.f")
+        .tableProperty("merge.log", "false").create()
+    }
+    assert(refuses(e1, "merge.log=false"), e1.getMessage)
+    val e2 = intercept[Exception] {
+      spark.sql("CREATE TABLE gml.g (id BIGINT) TBLPROPERTIES ('merge.log' = 'false')")
+    }
+    assert(refuses(e2, "merge.log=false"), e2.getMessage)
+    // older DDL that spells the commit log out still parses
+    spark.sql("CREATE TABLE gml.t (id BIGINT) TBLPROPERTIES ('merge.log' = 'true')")
+    spark.sql("CREATE TABLE gml.d (id BIGINT)")
+    for (t <- Seq("gml.t", "gml.d")) {
+      val e = intercept[Exception] {
+        spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('merge.log' = 'false')")
+      }
+      assert(refuses(e, "cannot be altered"), e.getMessage)
+    }
+  }
+
+  test("CREATE TABLE with no rows reads empty at its declared schema; the first write is v0") {
+    val wh = catalogAt("gemp", "graft-wh-empty")
+    spark.sql("CREATE TABLE gemp.t (id BIGINT, name STRING, price DECIMAL(18,2))")
+    assert(!graft.sources.CommitLog.exists(spark, s"$wh/t"), "CREATE commits nothing")
+    val df = spark.table("gemp.t")
+    assert(df.schema.map(f => f.name -> f.dataType)
+      === Seq("id" -> LongType, "name" -> StringType, "price" -> DecimalType(18, 2)))
+    assert(df.collect().isEmpty)
+    assert(spark.sql("SELECT count(*) FROM gemp.t").as[Long].head() === 0L)
+    assert(spark.sql("SELECT max(price) FROM gemp.t WHERE id > 0").head().isNullAt(0))
+    // no version exists to travel to yet
+    intercept[Exception](spark.sql("SELECT * FROM gemp.t VERSION AS OF 0").collect())
+    spark.sql("INSERT INTO gemp.t VALUES (1, 'a', 1.50)")
+    assert(graft.sources.CommitLog(spark, s"$wh/t").snapshot().version === 0L)
+    assert(spark.sql("SELECT * FROM gemp.t VERSION AS OF 0")
+      .as[(Long, String, java.math.BigDecimal)].collect().toSeq
+      === Seq((1L, "a", new java.math.BigDecimal("1.50"))))
+    // DML on a never-written table changes no rows and keeps the schema
+    spark.sql("CREATE TABLE gemp.u (id BIGINT, name STRING)")
+    spark.sql("DELETE FROM gemp.u WHERE id = 1")
+    spark.sql("UPDATE gemp.u SET name = 'x' WHERE id = 1")
+    assert(spark.table("gemp.u").count() === 0L)
+    assert(spark.table("gemp.u").columns.toSeq === Seq("id", "name"))
+    // MERGE into a never-written table inserts
+    spark.sql("CREATE TABLE gemp.m (id BIGINT, name STRING)")
+    spark.sql("""MERGE INTO gemp.m t USING (SELECT 7L AS id, 'm' AS name) s
+      ON t.id = s.id WHEN NOT MATCHED THEN INSERT *""")
+    assert(spark.table("gemp.m").as[(Long, String)].collect().toSeq === Seq((7L, "m")))
+  }
+
+  test("concurrent INSERT INTO a table created with no properties: every row lands") {
+    import java.util.concurrent.{CountDownLatch, Executors}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val wh = catalogAt("gcc", "graft-wh-conc")
+    spark.sql("CREATE TABLE gcc.t (id BIGINT, v STRING)")
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try {
+      for (round <- 0 until 3) {
+        val go = new CountDownLatch(1)
+        val writes = (1 to 2).map { w =>
+          val id = round * 2 + w
+          Future { go.await(); spark.sql(s"INSERT INTO gcc.t VALUES ($id, 'w$id')") }
+        }
+        go.countDown()
+        writes.foreach(Await.result(_, 5.minutes))
+      }
+    } finally pool.shutdown()
+    assert(spark.table("gcc.t").as[(Long, String)].collect().toSet
+      === (1L to 6L).map(i => i -> s"w$i").toSet)
+    assert(graft.sources.CommitLog(spark, s"$wh/t").snapshot().version === 5L,
+      "one commit per INSERT")
   }
 }

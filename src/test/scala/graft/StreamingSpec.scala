@@ -366,9 +366,9 @@ class StreamingSpec extends SparkSpecBase {
 
   test("foreachBatch streaming upsert sink converges to the batch last-wins table") {
     // The reference's DynamoDB put-per-row sink (index.js:249) as a
-    // streaming upsert: each micro-batch merges last-wins into a parquet
-    // target via the engine's own Upsert operator — the A7 + B14
-    // composition a production ingest runs.
+    // streaming upsert: each micro-batch merges last-wins and replaces a
+    // commit-log target in one commit — the A7 + B14 composition a
+    // production ingest runs.
     val srcDir: Path = Files.createTempDirectory("stream-upsert-src")
     val target = Files.createTempDirectory("stream-upsert-tgt").toString + "/t"
     val all = spark.read.parquet(s"$sfDir/events.parquet")
@@ -382,13 +382,14 @@ class StreamingSpec extends SparkSpecBase {
         val spark = batch.sparkSession
         val incoming = graft.operators.Dedup.lastWins(
           batch, Seq("user_id", "event_type"), Seq("ts", "event_id"))
+        val log = graft.sources.CommitLog(spark, target)
         val merged =
-          if (new java.io.File(target).exists()) {
-            val cur = spark.read.parquet(target)
+          if (graft.sources.CommitLog.exists(spark, target)) {
+            val cur = log.read()
             graft.operators.Dedup.lastWins(cur.unionByName(incoming),
               Seq("user_id", "event_type"), Seq("ts", "event_id"))
           } else incoming
-        graft.operators.Sinks.writeAtomic(merged, target)
+        log.replaceAll(merged); ()
     }.start()
     try {
       val half = all.agg(percentile_approx($"event_id", lit(0.5), lit(100)))
@@ -409,7 +410,7 @@ class StreamingSpec extends SparkSpecBase {
         srcDir.resolve("batch2.parquet"))
       q.processAllAvailable()
 
-      val streamed = spark.read.parquet(target)
+      val streamed = graft.sources.CommitLog(spark, target).read()
         .select("user_id", "event_type", "event_id")
         .orderBy("user_id", "event_type").collect().toSeq
       val batchWant = graft.operators.Dedup.lastWins(all,
